@@ -800,6 +800,10 @@ SELECT x, y, x AS nx, y AS ny, CAST(0 AS BIGINT) AS w FROM cdx_base"""))
     return dist
 
 
+KMEANS_SCHEMA = ("ck int, n bigint not null, cx bigint, cy bigint, "
+                 "inertia_e6 bigint")
+
+
 def kmeans_lloyd(points: DataFrame, k: int = 8, rounds: int = 3,
                  pin: str | None = None,
                  slot: str | None = None) -> DataFrame:
@@ -834,6 +838,8 @@ SELECT ROW_NUMBER() OVER (ORDER BY h, id) AS ck, x, y
 FROM (SELECT CAST(CONV(SUBSTRING(MD5(CAST(id AS STRING)), 1, 8), 16, 10)
              AS BIGINT) AS h, id, x, y
       FROM km_pts_v ORDER BY 1, 2 LIMIT {int(k)}) seeds""").collect()]
+    if not cent:   # no points: no seeds, no clusters
+        return spark.createDataFrame([], KMEANS_SCHEMA)
 
     def cent_values(cs):
         return ", ".join(

@@ -2,18 +2,22 @@
 
 The engine pattern mandated by the north rule (SURVEY.md §2.B E4-E6):
 
-1. **Cell cover** (driver/small side): every polygon is decomposed at
-   resolution ``r`` into ``full`` cells (entirely inside) and ``partial``
-   cells (boundary-crossing).  The polygon side is small (e.g. 177
-   Natural Earth countries); the cover is a few thousand rows.
+1. **Cell cover** (small side): every polygon is decomposed at resolution
+   ``r`` into ``full`` cells (entirely inside) and ``partial`` cells
+   (boundary-crossing).  Each partial (cell, polygon) is then split
+   quadtree-style into **leaves** until every leaf clips at most
+   ``LEAF_K`` polygon edges (``leaf_cover``).  The polygon side is small
+   (e.g. 177 Natural Earth countries); the cover is a few thousand rows.
 2. **Broadcast equi-join**: the huge point side gets a ``cell`` column
    (pure JVM-side expression — no Python) and equi-joins the broadcast
    cover on ``cell``.  Catalyst picks BroadcastHashJoin: no shuffle of
    the big side, the geometry theta-join became an equi-join.
-3. **PIP refinement**: only rows landing in ``partial`` cells run the
-   vectorized ray-cast (Arrow-batched pandas UDF); ``full``-cell rows
-   skip geometry entirely.  At sane resolutions >90% of matched area is
-   full cells, so the Python path touches a small fraction of rows.
+3. **PIP refinement**: rows landing in ``full`` cells skip geometry
+   entirely.  Rows landing in a partial cell keep only the leaf whose
+   integer range (at ``r + leaf_depth(r)``) holds the point, then run a
+   crossing-parity test against that leaf's ≤ 4 edges.  The leaf side
+   is 25 columns and the condition is short, so the BroadcastHashJoin
+   stays inside whole-stage codegen.
 
 Scale notes: the cover is O(polygons · cells/polygon) and broadcast once;
 the big side is never shuffled; skew from hot cells only matters for
@@ -22,6 +26,7 @@ downstream aggregations (see operators/skew.py).
 
 from __future__ import annotations
 
+import weakref
 from typing import Iterator
 
 import numpy as np
@@ -33,25 +38,44 @@ from ..functions import cells as C
 from ..functions import geom_np as G
 
 
-UNROLL_K = 24  # max clipped edges handled by the codegen'd predicate
+UNROLL_K = 24  # max clipped edges handled by the rasterizer's codegen'd predicate
+
+# Leaf cover.  A codegen'd refine condition stays fast only while it is
+# short: 4M points against the res-8 synthetic country cover (4 cores)
+# took 0.46 / 0.49 / 0.54 s with a 1 / 2 / 4-term crossing predicate and
+# 2.48 / 3.22 / 3.98 s with 8 / 12 / 16 terms (the generated method
+# grows too large for the JIT).  Hence at most LEAF_K edges per leaf.
+LEAF_K = 4
+# Splits stop LEAF_DEPTH levels below the cover resolution (a leaf side
+# is at least 1/64 of its cell side).  At 6 neither the res-8 synthetic
+# country cover (seed 1: 8,592 partial cells -> 10,653 leaves) nor 5k
+# seeded parcels (6,722 -> 73,374) has a leaf over LEAF_K.
+LEAF_DEPTH = 6
+# Leaves clip edges against their rectangle widened by this many
+# degrees, so a point whose float grid index rounds across a leaf border
+# still finds every edge near it (extra edges are harmless).  It is also
+# the clearance a reference point keeps from every clipped edge.
+_LEAF_MARGIN = 1e-9
+# Reference-point candidates as fractions of the leaf: the centre, then
+# eight off-grid points, no three of them collinear, so at most two
+# fall on any one edge and a leaf with ≤ LEAF_K edges always has one
+# clear of all of them.
+_REF_CANDIDATES = np.array([(0.5, 0.5), (0.4, 0.4), (0.3, 0.8), (0.2, 0.8),
+                            (0.6, 0.7), (0.4, 0.7), (0.2, 0.3), (0.7, 0.6),
+                            (0.8, 0.4)])
+
+FULL, LEAF, WIDE = 0, 1, 2  # leaf-cover row kinds
+EDGE_COLS = [f"e{j}_{c}" for j in range(LEAF_K) for c in ("ax", "ay", "bx", "by")]
+_LEAF_AUX = ["lx0", "lx1", "ly0", "ly1", "rx", "ry", "ref_inside"]
+LEAF_SCHEMA = ("cell long, polygon_fid long, kind int, lx0 long, lx1 long, "
+               "ly0 long, ly1 long, rx double, ry double, ref_inside boolean, "
+               + "".join(f"{c} double, " for c in EDGE_COLS)
+               + "edges array<array<double>>")
 
 
-def _flatten_edges(part_pdf: pd.DataFrame, k: int) -> pd.DataFrame:
-    """Partial-cover rows → NaN-padded scalar edge columns for the
-    unrolled predicate (4·k doubles per row)."""
-    n = len(part_pdf)
-    mat = np.full((n, 4 * k), np.nan)
-    for i, edges in enumerate(part_pdf["edges"]):
-        if edges:
-            arr = np.asarray(edges, dtype=np.float64).reshape(-1, 4)
-            mat[i, :4 * len(arr)] = arr.ravel()
-    out = part_pdf[["cell", "fid", "rx", "ry", "ref_inside"]].reset_index(drop=True)
-    for j in range(k):
-        out[f"e{j}_ax"] = mat[:, 4 * j]
-        out[f"e{j}_ay"] = mat[:, 4 * j + 1]
-        out[f"e{j}_bx"] = mat[:, 4 * j + 2]
-        out[f"e{j}_by"] = mat[:, 4 * j + 3]
-    return out
+def leaf_depth(res: int) -> int:
+    """Quadtree levels between a cover cell and its smallest leaf."""
+    return min(LEAF_DEPTH, C.MAX_RES - res)
 
 
 def _poly_dict(fid: int, layout: str, coords, ends) -> dict:
@@ -81,39 +105,51 @@ COVER_SCHEMA = ("cell long, polygon_fid long, full boolean, rx double, "
                 "lon0 double, lat0 double")
 
 
-def cell_cover_df(features: DataFrame, res: int) -> DataFrame:
-    """Distributed cell-cover build: each task covers its share of the
-    polygon corpus (mapInPandas over ``features`` rows) — nothing is
-    collected to the driver, so a million-parcel polygon side builds its
-    cover across the cluster instead of serially in driver Python.
-
-    Input needs columns (fid, geometry); rows with NULL geometry are
-    skipped.  Output matches ``polygon_cell_cover(with_edges=True)``.
-    """
-    from typing import Iterator
+def _map_polygons(features: DataFrame, build_polys, schema: str) -> DataFrame:
+    """Run ``build_polys(list of polygon dicts) -> pandas`` over the
+    polygon corpus in parallel (mapInPandas over ``features`` rows);
+    rows with NULL geometry are skipped."""
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            polys = []
-            for fid, g in zip(pdf["fid"], pdf["geometry"]):
-                if g is None:
-                    continue
-                polys.append(_poly_dict(fid, g["layout"], g["coords"],
-                                        g["ends"]))
-            if not polys:
-                continue
-            cover = polygon_cell_cover(polys, res, with_edges=True)
-            cover["edges"] = cover["edges"].map(
-                lambda e: e if e is not None else [])
-            cover = cover.rename(columns={"fid": "polygon_fid"})
-            yield cover[["cell", "polygon_fid", "full", "rx", "ry",
-                         "ref_inside", "edges", "lon0", "lat0"]]
+            polys = [_poly_dict(fid, g["layout"], g["coords"], g["ends"])
+                     for fid, g in zip(pdf["fid"], pdf["geometry"])
+                     if g is not None]
+            if polys:
+                yield build_polys(polys)
 
     # spread polygons across tasks — the cover build is CPU-bound per
     # polygon and input files may pack all polygons into one split
     return (features.select("fid", "geometry")
             .repartition(F.col("fid"))
-            .mapInPandas(build, schema=COVER_SCHEMA))
+            .mapInPandas(build, schema=schema))
+
+
+def cell_cover_df(features: DataFrame, res: int) -> DataFrame:
+    """Distributed cell-cover build: each task covers its share of the
+    polygon corpus — nothing is collected to the driver, so a
+    million-parcel polygon side builds its cover across the cluster
+    instead of serially in driver Python.
+
+    Input needs columns (fid, geometry).  Output matches
+    ``polygon_cell_cover(with_edges=True)`` (``COVER_SCHEMA``).
+    """
+    def build(polys: list[dict]) -> pd.DataFrame:
+        cover = polygon_cell_cover(polys, res, with_edges=True)
+        cover["edges"] = cover["edges"].map(
+            lambda e: e if e is not None else [])
+        cover = cover.rename(columns={"fid": "polygon_fid"})
+        return cover[["cell", "polygon_fid", "full", "rx", "ry",
+                      "ref_inside", "edges", "lon0", "lat0"]]
+
+    return _map_polygons(features, build, COVER_SCHEMA)
+
+
+def leaf_cover_df(features: DataFrame, res: int) -> DataFrame:
+    """Distributed ``leaf_cover`` (``LEAF_SCHEMA``): each task builds the
+    full rows and leaves of its share of the polygons."""
+    return _map_polygons(features, lambda polys: leaf_cover(polys, res),
+                         LEAF_SCHEMA)
 
 
 def polygon_cell_cover(polygons: list[dict], res: int,
@@ -128,7 +164,7 @@ def polygon_cell_cover(polygons: list[dict], res: int,
     little more PIP work.
 
     ``with_edges=True`` additionally attaches to every partial cell the
-    data the JVM-side refinement needs (see ``spatial_join``):
+    data the rasterizer's refinement needs (see ``tiles.rasterize_cover``):
     ``rx, ry`` — the cell center (a reference point), ``ref_inside`` —
     the polygon parity at that reference, and ``edges`` — the clipped
     edge list (every polygon edge whose bbox overlaps the cell; a
@@ -252,23 +288,221 @@ def _edge_segments(coords: np.ndarray, ends) -> np.ndarray:
     return np.concatenate(segs) if segs else np.zeros((0, 4))
 
 
+def _all_segments(polygons: list[dict]) -> tuple[np.ndarray, np.ndarray]:
+    """Every ring edge of every polygon as an (E, 4) array of
+    [x1, y1, x2, y2], plus the index of its polygon.  Zero-length edges
+    never cross anything and are left out."""
+    per = [_edge_segments(p["coords"], p["ends"]) for p in polygons]
+    segs = np.concatenate(per) if per else np.zeros((0, 4))
+    seg_poly = np.repeat(np.arange(len(per)), [len(s) for s in per])
+    keep = (segs[:, 0] != segs[:, 2]) | (segs[:, 1] != segs[:, 3])
+    return segs[keep], seg_poly[keep]
+
+
+def _clip(segs: np.ndarray, x0, y0, x1, y1) -> np.ndarray:
+    """Which segments touch their rectangle widened by ``_LEAF_MARGIN``:
+    bbox overlap, and the rectangle's corners not all strictly on one
+    side of the segment's line (separating-axis test)."""
+    m = _LEAF_MARGIN
+    x0, y0, x1, y1 = x0 - m, y0 - m, x1 + m, y1 + m
+    ax, ay, bx, by = segs.T
+    hit = ((np.minimum(ax, bx) <= x1) & (np.maximum(ax, bx) >= x0) &
+           (np.minimum(ay, by) <= y1) & (np.maximum(ay, by) >= y0))
+    dx, dy = bx - ax, by - ay
+    o = [dx * (cy - ay) - dy * (cx - ax)
+         for cx, cy in ((x0, y0), (x1, y0), (x0, y1), (x1, y1))]
+    above = (o[0] > 0) & (o[1] > 0) & (o[2] > 0) & (o[3] > 0)
+    below = (o[0] < 0) & (o[1] < 0) & (o[2] < 0) & (o[3] < 0)
+    return hit & ~above & ~below
+
+
+def _dist2(px, py, segs: np.ndarray) -> np.ndarray:
+    """Squared distance from each point to its segment."""
+    ax, ay, bx, by = segs.T
+    dx, dy = bx - ax, by - ay
+    t = np.clip(((px - ax) * dx + (py - ay) * dy) / (dx * dx + dy * dy), 0.0, 1.0)
+    return (px - ax - t * dx) ** 2 + (py - ay - t * dy) ** 2
+
+
+def _level0_pairs(segs, seg_poly, node_poly, node_cell, res):
+    """(node, segment) candidates: each edge against the cells its
+    widened bbox spans, matched to the partial cells of its polygon."""
+    pad = 2 * _LEAF_MARGIN
+    gx0, gy0 = C.xy_np(np.minimum(segs[:, 0], segs[:, 2]) - pad,
+                       np.minimum(segs[:, 1], segs[:, 3]) - pad, res)
+    gx1, gy1 = C.xy_np(np.maximum(segs[:, 0], segs[:, 2]) + pad,
+                       np.maximum(segs[:, 1], segs[:, 3]) + pad, res)
+    nx, ny = gx1 - gx0 + 1, gy1 - gy0 + 1
+    span = nx * ny
+    seg = np.repeat(np.arange(len(segs)), span)
+    k = np.arange(len(seg)) - np.repeat(np.cumsum(span) - span, span)
+    spanned = pd.DataFrame({
+        "poly": seg_poly[seg],
+        "cell": C.cell_from_xy(gx0[seg] + k % nx[seg], gy0[seg] + k // nx[seg], res),
+        "seg": seg})
+    nodes = pd.DataFrame({"poly": node_poly, "cell": node_cell,
+                          "node": np.arange(len(node_poly))})
+    pairs = spanned.merge(nodes, on=["poly", "cell"])
+    return pairs["node"].to_numpy(), pairs["seg"].to_numpy()
+
+
+def _split_nodes(nodes, pn, ps, segs, depth, w, h):
+    """Quadtree descent, vectorized per level.  ``nodes`` = (poly, cell,
+    lx0, ly0) arrays of the partial cells, ``pn, ps`` their candidate
+    (node, segment) pairs.  Returns the finished nodes (poly, cell, lx0,
+    ly0, size) and their clipped (node, segment) pairs sorted by node."""
+    poly, cell, lx0, ly0 = nodes
+    done_nodes, done_pairs, n_done = [], [], 0
+    for level in range(depth + 1):
+        size = 1 << (depth - level)
+        hit = _clip(segs[ps], -180.0 + lx0[pn] * w, -90.0 + ly0[pn] * h,
+                    -180.0 + (lx0[pn] + size) * w, -90.0 + (ly0[pn] + size) * h)
+        pn, ps = pn[hit], ps[hit]
+        cnt = np.bincount(pn, minlength=len(lx0))
+        done = (cnt <= LEAF_K) | (level == depth)
+        idx = np.nonzero(done)[0]
+        on = done[pn]
+        done_nodes.append((poly[idx], cell[idx], lx0[idx], ly0[idx],
+                           np.full(len(idx), size, dtype=np.int64)))
+        done_pairs.append((n_done + (np.cumsum(done) - 1)[pn[on]], ps[on]))
+        n_done += len(idx)
+        split = np.nonzero(~done)[0]
+        if not len(split):
+            break
+        # four children per split node (child 4r+q of the r-th split
+        # node); its pairs go to every child, clipped next level
+        q = np.tile(np.arange(4), len(split))
+        half = size // 2
+        poly, cell = np.repeat(poly[split], 4), np.repeat(cell[split], 4)
+        lx0 = np.repeat(lx0[split], 4) + (q & 1) * half
+        ly0 = np.repeat(ly0[split], 4) + (q >> 1) * half
+        rank = np.cumsum(~done) - 1
+        pn = 4 * np.repeat(rank[pn[~on]], 4) + np.tile(np.arange(4), (~on).sum())
+        ps = np.repeat(ps[~on], 4)
+    pn = np.concatenate([p for p, _ in done_pairs])
+    ps = np.concatenate([s for _, s in done_pairs])
+    order = np.argsort(pn, kind="stable")
+    return [np.concatenate(c) for c in zip(*done_nodes)], pn[order], ps[order]
+
+
+def _reference_points(x0, y0, sw, sh, pn, ps, segs):
+    """Per leaf (x0, y0, width sw, height sh; clipped pairs ``pn, ps``
+    sorted by leaf): the first ``_REF_CANDIDATES`` point clear of every
+    clipped edge, or the farthest one if none is (only possible past
+    ``LEAF_K`` edges)."""
+    cnt = np.bincount(pn, minlength=len(x0))
+    has = cnt > 0
+    starts = (np.cumsum(cnt) - cnt)[has]
+    fx, fy = _REF_CANDIDATES[:, 0], _REF_CANDIDATES[:, 1]
+    clearance = np.full((len(x0), len(fx)), np.inf)
+    for c in range(len(fx) if len(pn) else 0):
+        d2 = _dist2(x0[pn] + fx[c] * sw[pn], y0[pn] + fy[c] * sh[pn], segs[ps])
+        clearance[has, c] = np.minimum.reduceat(d2, starts)
+    clear = clearance > _LEAF_MARGIN ** 2
+    pick = np.where(clear.any(axis=1), clear.argmax(axis=1),
+                    clearance.argmax(axis=1))
+    return x0 + fx[pick] * sw, y0 + fy[pick] * sh
+
+
+def leaf_cover(polygons: list[dict], res: int) -> pd.DataFrame:
+    """Full cells plus quadtree leaves of the partial cells (``LEAF_SCHEMA``).
+
+    ``full`` rows are exactly ``polygon_cell_cover``'s.  Every partial
+    (cell, polygon) starts as one node covering its cell; a node whose
+    widened rectangle touches more than ``LEAF_K`` edges splits into
+    four, level by level, down to ``leaf_depth(res)`` levels.  A
+    finished node is a row whose integer range ``lx0..lx1, ly0..ly1`` is
+    at resolution ``res + leaf_depth(res)``:
+
+    * ``LEAF`` — ≤ ``LEAF_K`` clipped edges as NaN-padded ``e{j}_*``
+      columns; a leaf with none is kept only if it lies inside;
+    * ``WIDE`` — still over ``LEAF_K`` edges at the last level, the
+      edges carried as an ``edges`` array for the aggregate() path.
+
+    ``rx, ry`` is a reference point inside the leaf at least
+    ``_LEAF_MARGIN`` from every clipped edge (the centre unless an edge
+    passes through it) and ``ref_inside`` its polygon parity.  A point
+    with the leaf's grid index is inside iff ``ref_inside`` flips once
+    per clipped edge crossing the segment reference → point.
+    """
+    depth = leaf_depth(res)
+    w = 360.0 / (1 << (res + depth))
+    h = 180.0 / (1 << (res + depth))
+    cover = polygon_cell_cover(
+        [{**p, "fid": i} for i, p in enumerate(polygons)], res)
+    full = cover[cover["full"]]
+    part = cover[~cover["full"]]
+    node_poly, node_cell = part["fid"].to_numpy(), part["cell"].to_numpy()
+    _, ix, iy = C.cell_decode_np(node_cell)
+    segs, seg_poly = _all_segments(polygons)
+    pn, ps = _level0_pairs(segs, seg_poly, node_poly, node_cell, res)
+    (poly, cell, lx0, ly0, size), pn, ps = _split_nodes(
+        (node_poly, node_cell, ix << depth, iy << depth), pn, ps, segs,
+        depth, w, h)
+
+    x0, y0 = -180.0 + lx0 * w, -90.0 + ly0 * h
+    rx, ry = _reference_points(x0, y0, size * w, size * h, pn, ps, segs)
+    ref_inside = np.zeros(len(poly), dtype=bool)
+    by_poly = np.argsort(poly, kind="stable")
+    for grp in np.split(by_poly, np.flatnonzero(np.diff(poly[by_poly])) + 1):
+        if len(grp):
+            p = polygons[poly[grp[0]]]
+            ref_inside[grp] = G.point_in_polygon_chunked(
+                rx[grp], ry[grp], p["coords"], p["ends"])
+
+    cnt = np.bincount(pn, minlength=len(poly))
+    starts = np.cumsum(cnt) - cnt
+    narrow = cnt[pn] <= LEAF_K
+    slot = np.arange(len(pn)) - starts[pn]
+    e = np.full((len(poly), 4 * LEAF_K), np.nan)
+    for c in range(4):
+        e[pn[narrow], 4 * slot[narrow] + c] = segs[ps[narrow], c]
+    wide = cnt > LEAF_K
+    edges = np.full(len(poly), None, dtype=object)
+    for i in np.nonzero(wide)[0]:
+        edges[i] = segs[ps[starts[i]:starts[i] + cnt[i]]].tolist()
+
+    keep = (cnt > 0) | ref_inside
+    n_full = len(full)
+
+    def rows(full_value, leaf_values):
+        return np.concatenate([np.full(n_full, full_value,
+                                       dtype=np.asarray(leaf_values).dtype),
+                               leaf_values[keep]])
+
+    fids = np.array([p["fid"] for p in polygons], dtype=np.int64)
+    out = {"cell": np.concatenate([full["cell"].to_numpy(), cell[keep]]),
+           "polygon_fid": fids[np.concatenate([full["fid"].to_numpy(),
+                                               poly[keep]])],
+           "kind": rows(FULL, np.where(wide, WIDE, LEAF).astype(np.int32)),
+           "lx0": rows(0, lx0), "lx1": rows(0, lx0 + size - 1),
+           "ly0": rows(0, ly0), "ly1": rows(0, ly0 + size - 1),
+           "rx": rows(np.nan, rx), "ry": rows(np.nan, ry),
+           "ref_inside": rows(True, ref_inside)}
+    for j, name in enumerate(EDGE_COLS):
+        out[name] = rows(np.nan, e[:, j])
+    out["edges"] = rows(None, edges)
+    return pd.DataFrame(out)
+
+
 def _crossing_filter_sql(lon_col: str, lat_col: str) -> str:
     """JVM point-in-polygon refinement as a single SQL predicate.
 
     A point is inside iff the reference parity (``ref_inside`` at the
-    cell center) flips once per polygon-boundary crossing along the
-    segment center→point.  The segment lies inside the cell, so only the
-    cell's clipped ``edges`` can cross it; the crossing test is the
-    standard double-orientation segment intersection with a half-open
-    sign rule (``d > 0`` vs ``d <= 0``), so a polygon vertex lying
-    exactly on the center→point segment — common with round-number
-    grids — still counts exactly one crossing per true boundary pass.
+    reference ``rx, ry``) flips once per polygon-boundary crossing along
+    the segment reference→point.  The segment lies inside the cell (or
+    leaf), so only its clipped ``edges`` can cross it; the crossing test
+    is the standard double-orientation segment intersection with a
+    half-open sign rule (``d > 0`` vs ``d <= 0``), so a polygon vertex
+    lying exactly on the reference→point segment — common with
+    round-number grids — still counts exactly one crossing per true
+    boundary pass.
 
     Runs via ``aggregate()`` over the broadcast edge array: JVM, no
     Python worker.  NOTE: higher-order functions are interpreted (not
-    codegen'd) and allocation-heavy; the hot path uses the unrolled
-    variant below.  This form remains for cells whose clipped edge count
-    exceeds the unroll width.
+    codegen'd) and allocation-heavy; it serves the rare leaves still
+    over ``LEAF_K`` edges at the last quadtree level, and the
+    rasterizer's cells over its unroll width.
     """
     p, q = lon_col, lat_col
     # orient(a,b,c) = (bx-ax)(cy-ay) - (by-ay)(cx-ax); e = [x1,y1,x2,y2]
@@ -283,16 +517,22 @@ def _crossing_filter_sql(lon_col: str, lat_col: str) -> str:
 
 def _crossing_filter_unrolled_sql(lon_col: str, lat_col: str, k: int) -> str:
     """Crossing-parity predicate over ``k`` scalar edge columns
-    (e{j}_ax..e{j}_by, NaN-padded) — statically unrolled so the whole
-    filter stays inside whole-stage codegen: no array access, no lambda,
-    no per-row allocation.  NaN padding contributes zero crossings
-    because Spark SQL orders NaN greater than every number, so BOTH
-    sides of each ``(d > 0) != (d > 0)`` evaluate TRUE and the
-    inequality is false (do NOT rewrite as a mixed AND/NOT form — that
-    would count phantom crossings on the NaN rows); the half-open sign
-    rule keeps vertex-on-segment degeneracies exact.  This is what lets the
-    refinement stage scale linearly with cores (the interpreted
-    ``aggregate()`` variant is memory-allocation-bound).
+    (e{j}_ax..e{j}_by, NaN-padded) — statically unrolled: no array
+    access, no lambda, no per-row allocation.  NaN padding contributes
+    zero crossings because Spark SQL orders NaN greater than every
+    number, so BOTH sides of each ``(d > 0) != (d > 0)`` evaluate TRUE
+    and the inequality is false (do NOT rewrite as a mixed AND/NOT form
+    — that would count phantom crossings on the NaN rows); the half-open
+    sign rule keeps vertex-on-segment degeneracies exact.
+
+    Width matters (Spark 4.1.2, 4 cores).  The spatial join uses k = 4
+    (``LEAF_K``): the predicate lands in the BroadcastHashJoin condition
+    and the join stays in whole-stage codegen.  A codegen'd condition
+    of 8-16 terms compiles to a method too large for the JIT (2.5-4.0 s
+    against 0.54 s at k = 4 on 4M points); at 24 terms the 101-column
+    build side passed ``spark.sql.codegen.maxFields`` (100) and the join
+    ran outside codegen.  The rasterizer's tiered 6/24 use is a
+    different context (a Filter over an exploded pixel stage).
     """
     p, q = lon_col, lat_col
     terms = []
@@ -306,19 +546,29 @@ def _crossing_filter_unrolled_sql(lon_col: str, lat_col: str, k: int) -> str:
     return f"(ref_inside != (pmod({' + '.join(terms)}, 2) = 1))"
 
 
+def _unpersist(table: DataFrame) -> None:
+    if table.sparkSession.sparkContext._jsc is not None:   # session still up
+        table.unpersist()
+
+
 class PreparedCover:
-    """Session-lifetime cover artifact: the three cover DataFrames
-    (full / unrolled-narrow / HOF-wide) built once and reused across
-    joins — the pandas→Spark conversion and column flattening are paid
-    once per session, like building any index.
+    """Session-lifetime cover artifact: one leaf-cover table
+    (``LEAF_SCHEMA``) built once and reused across joins, like any
+    index.  Three projections of it feed the join:
+
+    * ``full`` — (cell, polygon_fid) of cells entirely inside;
+    * ``narrow`` — the leaves (≤ ``LEAF_K`` edges as scalar columns);
+    * ``wide`` — leaves still over ``LEAF_K`` edges, or None if there
+      are none (the usual case).
 
     ``broadcast`` decides the join strategy downstream: True (small
-    cover) broadcasts all three sides; False leaves Catalyst to shuffle
-    both sides on ``cell`` — the right key when the polygon corpus is
-    too big to broadcast.
+    cover) broadcasts every side; False leaves Catalyst to shuffle both
+    sides on ``cell`` — the right key when the polygon corpus is too big
+    to broadcast.
     """
 
     broadcast: bool = True
+    _release = None   # from_features covers: releases the cached table
 
     @classmethod
     def from_features(cls, features: DataFrame, res: int,
@@ -326,66 +576,45 @@ class PreparedCover:
         """Build the cover DISTRIBUTED from a ``features`` DataFrame —
         no driver-side collect, no serial cover loop (VERDICT r1 #3).
 
-        The cover job runs once (cached + materialized here, like an
-        index build); the three derived DataFrames are cheap projections
-        of the cached result.  Covers bigger than ``max_broadcast_rows``
-        flip the downstream joins to shuffle-on-cell.
+        The build runs once here (cached and counted per row kind); the
+        cache is released when the cover is dropped or ``unpersist()``
+        is called, so rebuilding a cover does not pile up cached tables.
+        Covers of more than ``max_broadcast_rows`` rows (full plus leaf
+        rows) flip the downstream joins to shuffle-on-cell.
         """
         self = cls.__new__(cls)
-        self.res = res
-        cover = cell_cover_df(features, res).cache()
-        n_total = cover.count()   # materialize the index build
-        self.broadcast = n_total <= max_broadcast_rows
-        self.full = cover.where("full").select("cell", "polygon_fid")
-        n_edges = F.size("edges")
-        ecols = []
-        for j in range(UNROLL_K):
-            e = F.try_element_at("edges", F.lit(j + 1))
-            for c, x in enumerate(("ax", "ay", "bx", "by")):
-                ecols.append(F.try_element_at(e, F.lit(c + 1))
-                             .alias(f"e{j}_{x}"))
-        narrow = (cover.where(~F.col("full") & (n_edges <= UNROLL_K))
-                  .select("cell", "polygon_fid", "rx", "ry", "ref_inside",
-                          *ecols))
-        self.narrow = narrow if narrow.limit(1).count() else None
-        self.narrow_aux = [c for c in narrow.columns
-                           if c not in ("cell", "polygon_fid")]
-        wide = (cover.where(~F.col("full") & (n_edges > UNROLL_K))
-                .select("cell", "polygon_fid", "rx", "ry", "ref_inside",
-                        "edges"))
-        self.wide = wide if wide.limit(1).count() else None
+        # Spark shares one cache entry between equal plans; tagging the
+        # plan with this cover's id() keeps the entry its own, so
+        # releasing another cover built from the same features leaves
+        # this one cached
+        table = (leaf_cover_df(features, res)
+                 .withColumn("build", F.lit(id(self))).cache())
+        self._release = weakref.finalize(self, _unpersist, table)
+        self._release.atexit = False
+        kinds = dict(table.groupBy("kind").count().collect())
+        self._split(table, res, kinds)
+        self.broadcast = sum(kinds.values()) <= max_broadcast_rows
         return self
 
     def __init__(self, spark: SparkSession, polygons: list[dict], res: int):
+        pdf = leaf_cover(polygons, res)
+        self._split(spark.createDataFrame(pdf, schema=LEAF_SCHEMA), res,
+                    pdf["kind"].value_counts().to_dict())
+
+    def _split(self, table: DataFrame, res: int, kinds: dict) -> None:
         self.res = res
-        self.broadcast = True
-        cover_pdf = polygon_cell_cover(polygons, res, with_edges=True)
-        cover_pdf["edges"] = cover_pdf["edges"].map(
-            lambda e: e if e is not None else [])
-        part_pdf = cover_pdf[~cover_pdf["full"]]
-        n_edges = part_pdf["edges"].map(len)
-        full_pdf = cover_pdf[cover_pdf["full"]]
-        self.full = spark.createDataFrame(
-            full_pdf[["cell", "fid"]], schema="cell long, fid long") \
-            .withColumnRenamed("fid", "polygon_fid")
-        narrow_pdf = part_pdf[n_edges <= UNROLL_K]
-        self.narrow = None
-        self.narrow_aux: list[str] = []
-        if len(narrow_pdf):
-            flat = _flatten_edges(narrow_pdf, UNROLL_K)
-            self.narrow = spark.createDataFrame(flat) \
-                .withColumnRenamed("fid", "polygon_fid")
-            self.narrow_aux = [c for c in flat.columns
-                               if c not in ("cell", "fid")]
-        wide_pdf = part_pdf[n_edges > UNROLL_K]
-        self.wide = None
-        if len(wide_pdf):
-            self.wide = spark.createDataFrame(
-                wide_pdf.drop(columns=["full", "lon0", "lat0"],
-                              errors="ignore"),
-                schema="cell long, fid long, rx double, ry double, "
-                       "ref_inside boolean, edges array<array<double>>") \
-                .withColumnRenamed("fid", "polygon_fid")
+        self.full = table.where(f"kind = {FULL}").select("cell", "polygon_fid")
+        self.narrow = (table.where(f"kind = {LEAF}")
+                       .select("cell", "polygon_fid", *_LEAF_AUX, *EDGE_COLS)
+                       if kinds.get(LEAF) else None)
+        self.wide = (table.where(f"kind = {WIDE}")
+                     .select("cell", "polygon_fid", *_LEAF_AUX, "edges")
+                     if kinds.get(WIDE) else None)
+
+    def unpersist(self) -> None:
+        """Release the cached cover table now (from_features covers)."""
+        if self._release is not None:
+            self._release()
 
 
 def spatial_join_prepared(points: DataFrame, prepared: PreparedCover,
@@ -393,25 +622,33 @@ def spatial_join_prepared(points: DataFrame, prepared: PreparedCover,
                           keep_cols: list[str] | None = None) -> DataFrame:
     """JVM spatial join against a PreparedCover (see spatial_join).
 
+    Full cells join on ``cell`` alone.  Leaves join on ``cell`` and keep
+    the pair when the point's grid index at ``res + leaf_depth(res)``
+    falls in the leaf's range and the crossing-parity test passes.
+    Both grid indices floor the same scaled value, so a point's cell
+    and its leaf index always agree.
+
     Small covers broadcast (no shuffle of the point side at all); covers
     past the broadcast threshold join plain — Catalyst shuffles both
     sides on ``cell``, the correct co-location key for a huge polygon
     corpus."""
     side = F.broadcast if prepared.broadcast else (lambda df: df)
-    pts = points.withColumn(
-        "cell", F.expr(C.cell_sql(lon_col, lat_col, prepared.res)))
+    res = prepared.res
+    pts = points.withColumn("cell", F.expr(C.cell_sql(lon_col, lat_col, res)))
     out = pts.join(side(prepared.full), "cell")
-    if prepared.narrow is not None:
-        refined = (pts.join(side(prepared.narrow), "cell")
-                   .where(F.expr(_crossing_filter_unrolled_sql(
-                       lon_col, lat_col, UNROLL_K)))
-                   .drop(*prepared.narrow_aux))
+    fine = (pts.withColumn("gx", F.expr(C.ix_sql(lon_col, res + leaf_depth(res))))
+            .withColumn("gy", F.expr(C.iy_sql(lat_col, res + leaf_depth(res)))))
+    in_leaf = "gx BETWEEN lx0 AND lx1 AND gy BETWEEN ly0 AND ly1"
+    for leaves, crossing, payload in (
+            (prepared.narrow,
+             _crossing_filter_unrolled_sql(lon_col, lat_col, LEAF_K), EDGE_COLS),
+            (prepared.wide, _crossing_filter_sql(lon_col, lat_col), ["edges"])):
+        if leaves is None:
+            continue
+        refined = (fine.join(side(leaves), "cell")
+                   .where(F.expr(f"{in_leaf} AND {crossing}"))
+                   .drop("gx", "gy", *_LEAF_AUX, *payload))
         out = out.unionByName(refined)
-    if prepared.wide is not None:
-        refined_w = (pts.join(side(prepared.wide), "cell")
-                     .where(F.expr(_crossing_filter_sql(lon_col, lat_col)))
-                     .drop("rx", "ry", "ref_inside", "edges"))
-        out = out.unionByName(refined_w)
     if keep_cols is not None:
         out = out.select(*keep_cols)
     return out
@@ -420,75 +657,19 @@ def spatial_join_prepared(points: DataFrame, prepared: PreparedCover,
 def spatial_join(spark: SparkSession, points: DataFrame, polygons: list[dict],
                  res: int, lon_col: str = "lon", lat_col: str = "lat",
                  keep_cols: list[str] | None = None,
-                 method: str = "jvm",
-                 cover_pdf: pd.DataFrame | None = None) -> DataFrame:
+                 method: str = "jvm") -> DataFrame:
     """points ⋈ polygons → rows (point cols..., polygon_fid).
 
     Implements E6: broadcast cell-cover equi-join + E5 PIP refinement on
-    partial cells only.  ``method='jvm'`` (default, the scale path) does
-    the refinement with a codegen-able crossing-count predicate over
-    clipped edge lists carried by the broadcast cover — the entire join
-    is Python-free.  ``method='pandas'`` uses the vectorized numpy
-    ray-cast instead (reference semantics twin; both are oracle-tested
-    to identical output).
+    partial cells only.  ``method='jvm'`` (default, the scale path)
+    builds a driver-side ``PreparedCover`` and joins against it — the
+    entire join is Python-free.  ``method='pandas'`` uses the vectorized
+    numpy ray-cast instead (reference semantics twin; both are
+    oracle-tested to identical output).
     """
     if method == "jvm":
-        if cover_pdf is None:
-            cover_pdf = polygon_cell_cover(polygons, res, with_edges=True)
-        else:
-            cover_pdf = cover_pdf.copy()
-        cover_pdf["edges"] = cover_pdf["edges"].map(
-            lambda e: e if e is not None else [])
-        cover_pdf = cover_pdf.drop(columns=["lon0", "lat0"], errors="ignore")
-        cover = spark.createDataFrame(
-            cover_pdf,
-            schema="cell long, fid long, full boolean, rx double, ry double, "
-                   "ref_inside boolean, edges array<array<double>>") \
-            .withColumnRenamed("fid", "polygon_fid")
-        pts = points.withColumn("cell", F.expr(C.cell_sql(lon_col, lat_col, res)))
-
-        # Three broadcast joins, cheapest-first:
-        #  * full cells — no edge payload, no predicate at all;
-        #  * partial cells with ≤ UNROLL_K clipped edges (p99 ≈ 11 at
-        #    res 7/8) — statically unrolled codegen crossing predicate;
-        #  * the rare dense cells — interpreted aggregate() fallback.
-        # Higher cover resolution → thinner boundary band → fewer refined
-        # rows (resolution does not change the output; tests pin that).
-        full_cover = cover.where("full").select("cell", "polygon_fid")
-        full_rows = pts.join(F.broadcast(full_cover), "cell")
-        out = full_rows
-
-        part_pdf = cover_pdf[~cover_pdf["full"]]
-        n_edges = part_pdf["edges"].map(len)
-        narrow_pdf = part_pdf[n_edges <= UNROLL_K]
-        wide_pdf = part_pdf[n_edges > UNROLL_K]
-
-        if len(narrow_pdf):
-            flat = _flatten_edges(narrow_pdf, UNROLL_K)
-            narrow = spark.createDataFrame(flat) \
-                .withColumnRenamed("fid", "polygon_fid")
-            aux = [c for c in flat.columns if c not in ("cell", "fid")]
-            refined = (pts.join(F.broadcast(narrow), "cell")
-                       .where(F.expr(_crossing_filter_unrolled_sql(
-                           lon_col, lat_col, UNROLL_K)))
-                       .drop(*[c for c in aux]))
-            out = out.unionByName(refined)
-
-        if len(wide_pdf):
-            wide = spark.createDataFrame(
-                wide_pdf.drop(columns=["full"]),
-                schema="cell long, fid long, rx double, ry double, "
-                       "ref_inside boolean, edges array<array<double>>") \
-                .withColumnRenamed("fid", "polygon_fid")
-            refined_w = (pts.join(F.broadcast(wide), "cell")
-                         .where(F.expr(_crossing_filter_sql(lon_col, lat_col)))
-                         .drop("rx", "ry", "ref_inside", "edges"))
-            out = out.unionByName(refined_w)
-
-        if keep_cols is not None:
-            out = out.select(*keep_cols)
-        return out
-    # (pandas-refine method below never materializes lon0/lat0)
+        return spatial_join_prepared(points, PreparedCover(spark, polygons, res),
+                                     lon_col, lat_col, keep_cols)
 
     cover_pdf = polygon_cell_cover(polygons, res)
     cover = spark.createDataFrame(cover_pdf).withColumnRenamed("fid", "polygon_fid")

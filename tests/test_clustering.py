@@ -205,3 +205,20 @@ def test_label_blobs_matches_union_find(spark):
 
     assert got == expect
     assert len(got) == 4  # L-blob + two diagonal singletons + isolated
+
+
+def test_kmeans_lloyd_empty_input(spark):
+    """No points → no clusters: an empty frame with the same schema as a
+    non-empty run (not a VALUES list with no rows, which fails to parse)."""
+    import pandas as pd
+
+    from go_shapefile_spark.operators.clustering import kmeans_lloyd
+
+    empty = spark.createDataFrame([], "id long, x long, y long")
+    got = kmeans_lloyd(empty, k=4, rounds=2)
+    assert got.count() == 0
+    pts = spark.createDataFrame(pd.DataFrame({
+        "id": np.arange(40, dtype=np.int64),
+        "x": np.arange(40, dtype=np.int64) * 7,
+        "y": np.arange(40, dtype=np.int64) % 9}))
+    assert got.schema == kmeans_lloyd(pts, k=4, rounds=2).schema

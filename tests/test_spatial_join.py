@@ -6,13 +6,14 @@ import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from go_shapefile_spark.functions import cells as C
 from go_shapefile_spark.operators.knn import knn_radius, knn_radius_oracle_sql
 from go_shapefile_spark.operators.spatial_join import (
-    polygon_cell_cover, polygons_from_features, spatial_join,
-    spatial_join_bruteforce,
+    PreparedCover, leaf_depth, polygon_cell_cover, polygons_from_features,
+    spatial_join, spatial_join_bruteforce, spatial_join_prepared,
 )
 from go_shapefile_spark.sources.shapefile import read_shapefile_df
 
@@ -191,6 +192,188 @@ def test_distributed_cover_matches_driver_cover(spark):
     c = (spatial_join_prepared(pts, small, keep_cols=["idx", "polygon_fid"])
          .toPandas().sort_values(["idx", "polygon_fid"]).reset_index(drop=True))
     pd.testing.assert_frame_equal(a, c)
+
+
+FEATURES_SCHEMA = ("fid long, geometry struct<layout:string, "
+                   "coords:array<double>, ends:array<int>, rings:array<int>>")
+
+
+def _features(spark, polys):
+    rows = [(p["fid"], {"layout": "XY",
+                        "coords": [float(v) for v in p["coords"]],
+                        "ends": [int(e) for e in p["ends"]],
+                        "rings": [1] * len(p["ends"])}) for p in polys]
+    return spark.createDataFrame(rows, FEATURES_SCHEMA)
+
+
+def _join_rows(pts, cover):
+    got = spatial_join_prepared(pts, cover, keep_cols=["id", "polygon_fid"])
+    return sorted(map(tuple, got.collect()))
+
+
+def _off_boundary(pdf, polys, eps=1e-9):
+    """Points farther than ``eps`` from every polygon edge — on the
+    boundary itself inside/outside is a convention, not a fact."""
+    px, py = pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
+    near = np.zeros(len(pdf), dtype=bool)
+    for p in polys:
+        xy = np.asarray(p["coords"]).reshape(-1, 2)
+        start = 0
+        for end in p["ends"]:
+            ring = xy[start:end // 2]
+            start = end // 2
+            for (ax, ay), (bx, by) in zip(ring[:-1], ring[1:]):
+                dx, dy = bx - ax, by - ay
+                den = dx * dx + dy * dy
+                t = np.clip(((px - ax) * dx + (py - ay) * dy) / den, 0, 1) \
+                    if den else 0.0
+                near |= (px - ax - t * dx) ** 2 + (py - ay - t * dy) ** 2 \
+                    <= eps * eps
+    return pdf[~near]
+
+
+def _bruteforce_rows(pdf, polys):
+    exp = spatial_join_bruteforce(pdf, polys)
+    return sorted(zip(exp["id"].astype(int), exp["polygon_fid"].astype(int)))
+
+
+@st.composite
+def dyadic_scene(draw):
+    """1-3 polygons (1-2 parts each, some with a hole) around one spot.
+    Most vertices snap to the ``res + leaf_depth(res)`` grid, coarsened
+    per polygon by a power of two, so edges run along leaf borders and
+    through the centres of cells and leaves at every quadtree level."""
+    res = draw(st.integers(min_value=3, max_value=7))
+    k = res + leaf_depth(res)
+    w, h = 360.0 / (1 << k), 180.0 / (1 << k)
+    cell = 1 << leaf_depth(res)                 # grid steps per cell side
+    cx = draw(st.integers(min_value=4 * cell, max_value=(1 << k) - 4 * cell))
+    cy = draw(st.integers(min_value=4 * cell, max_value=(1 << k) - 4 * cell))
+    polys = []
+    for fid in range(draw(st.integers(min_value=1, max_value=3))):
+        step = 1 << draw(st.integers(0, leaf_depth(res)))
+        rings = []
+        for part in range(draw(st.integers(min_value=1, max_value=2))):
+            ox = cx + part * 2 * cell + draw(st.integers(-cell, cell))
+            oy = cy + draw(st.integers(-cell, cell))
+            n = draw(st.integers(min_value=3, max_value=8))
+            ang = np.radians(sorted(draw(st.lists(
+                st.integers(0, 359), min_size=n, max_size=n, unique=True))))
+            rad = np.array(draw(st.lists(
+                st.integers(2, 3 * cell // 2), min_size=n, max_size=n)))
+            snap = np.array(draw(st.lists(st.booleans(), min_size=n,
+                                          max_size=n)))
+            gx, gy = ox + rad * np.cos(ang), oy + rad * np.sin(ang)
+            gx = np.where(snap, np.round(gx / step) * step, gx)
+            gy = np.where(snap, np.round(gy / step) * step, gy)
+            rings.append((gx, gy))
+            if part == 0 and draw(st.booleans()):   # a square hole
+                d = draw(st.integers(1, 2))
+                rings.append((ox + np.array([-d, -d, d, d]),
+                              oy + np.array([-d, d, d, -d])))
+        coords, ends = [], []
+        for gx, gy in rings:
+            lon = np.r_[gx, gx[0]] * w - 180.0
+            lat = np.r_[gy, gy[0]] * h - 90.0
+            coords.append(np.column_stack([lon, lat]).ravel())
+            ends.append(sum(len(c) for c in coords))
+        polys.append({"fid": 10 + fid, "coords": np.concatenate(coords),
+                      "ends": ends})
+    return res, polys, (cx * w - 180.0, cy * h - 90.0, cell * w, cell * h), \
+        draw(st.integers(0, 2 ** 16))
+
+
+def _scene_points(res, polys, box, seed) -> pd.DataFrame:
+    """Uniform points around the polygons, points on leaf corners and
+    centres, and points just off random edges (1e-6 to 1e-2 cells)."""
+    lon0, lat0, cw, ch = box
+    rng = np.random.default_rng(seed)
+    k = res + leaf_depth(res)
+    w, h = 360.0 / (1 << k), 180.0 / (1 << k)
+    lon = [lon0 + rng.uniform(-4, 6, 300) * cw]
+    lat = [lat0 + rng.uniform(-4, 4, 300) * ch]
+    grid = rng.integers(-4 * (cw // w), 6 * (cw // w), (2, 100))
+    frac = rng.choice([0.0, 0.5], (2, 100))
+    lon.append(lon0 + (grid[0] + frac[0]) * w)
+    lat.append(lat0 + (grid[1] + frac[1]) * h)
+    for p in polys:
+        xy = np.asarray(p["coords"]).reshape(-1, 2)
+        i = rng.integers(0, len(xy) - 1, 100)
+        a, d = xy[i], xy[i + 1] - xy[i]
+        normal = np.column_stack([-d[:, 1], d[:, 0]])
+        normal /= np.maximum(np.hypot(*normal.T), 1e-300)[:, None]
+        off = rng.choice([-1, 1], 100) * 10 ** rng.uniform(-6, -2, 100) * cw
+        q = a + rng.random((100, 1)) * d + off[:, None] * normal
+        lon.append(q[:, 0])
+        lat.append(q[:, 1])
+    lon, lat = np.concatenate(lon), np.concatenate(lat)
+    return pd.DataFrame({"id": np.arange(len(lon), dtype=np.int64),
+                         "lon": np.clip(lon, -180, 180),
+                         "lat": np.clip(lat, -90, 90)})
+
+
+@given(dyadic_scene())
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+def test_leaf_cover_join_matches_bruteforce_property(spark, scene):
+    """Distributed cover, driver-side cover and brute force agree row
+    for row on random (multipart, holed) polygons whose vertices sit on
+    the leaf grid; points include leaf centres and leaf corners."""
+    res, polys, box, seed = scene
+    pdf = _scene_points(res, polys, box, seed)
+    pts = spark.createDataFrame(pdf)
+
+    dist = _join_rows(pts, PreparedCover.from_features(_features(spark, polys), res))
+    local = _join_rows(pts, PreparedCover(spark, polys, res))
+    assert dist == local
+    off = _off_boundary(pdf, polys)
+    keep = set(off["id"])
+    assert [r for r in dist if r[0] in keep] == _bruteforce_rows(off, polys)
+
+
+def test_leaf_over_k_edges_takes_aggregate_path(spark):
+    """Three triangles meeting at one vertex: every leaf holding the
+    vertex clips six edges at any depth, so it ends on the aggregate()
+    path — and the join still equals brute force."""
+    vx, vy = 10.3, 20.7
+    coords = []
+    for a in (0.0, 2.1, 4.2):
+        coords += [vx, vy, vx + 3 * np.cos(a), vy + 3 * np.sin(a),
+                   vx + 3 * np.cos(a + 1), vy + 3 * np.sin(a + 1), vx, vy]
+    polys = [{"fid": 7, "coords": np.array(coords), "ends": [8, 16, 24]}]
+    rng = np.random.default_rng(3)
+    pdf = pd.DataFrame({"id": np.arange(4000, dtype=np.int64),
+                        "lon": vx + np.r_[rng.normal(0, 1, 3000),
+                                          rng.uniform(-1e-3, 1e-3, 1000)],
+                        "lat": vy + np.r_[rng.normal(0, 1, 3000),
+                                          rng.uniform(-1e-3, 1e-3, 1000)]})
+    pts = spark.createDataFrame(pdf)
+    exp = _bruteforce_rows(pdf, polys)
+    for cover in (PreparedCover(spark, polys, res=6),
+                  PreparedCover.from_features(_features(spark, polys), res=6)):
+        assert cover.wide is not None and cover.narrow is not None
+        assert _join_rows(pts, cover) == exp
+    assert len(exp) > 500
+
+
+def test_cover_rebuild_releases_its_cache(spark):
+    """Rebuilding a distributed cover does not pile up cached tables: a
+    dropped cover releases its cache (and only its own — a rebuild from
+    the same features stays cached), unpersist() releases it now."""
+    def features(x0):
+        ring = [x0, 0.0, x0, 30.0, x0 + 40, 30.0, x0 + 40, 0.0, x0, 0.0]
+        return _features(spark, [{"fid": 1, "coords": ring, "ends": [10]}])
+
+    jsc = spark.sparkContext._jsc
+    cover = PreparedCover.from_features(features(0.0), res=5)
+    cached = jsc.getPersistentRDDs().size()
+    moved = [features(x0) for x0 in (10.0, 20.0, 30.0, 40.0)]
+    for feats in moved + moved[-1:]:
+        cover = PreparedCover.from_features(feats, res=5)
+        assert jsc.getPersistentRDDs().size() == cached
+    cover.unpersist()
+    assert jsc.getPersistentRDDs().size() == cached - 1
 
 
 def test_knn_exact_plan_no_cartesian(spark):

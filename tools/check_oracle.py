@@ -79,7 +79,8 @@ def main() -> int:
     oracles = entry.oracle_sql()
     names = args or list(queries)
 
-    spark = get_spark(app_name="check_oracle", cores=8, shuffle_partitions=16)
+    spark = get_spark(app_name="check_oracle", cores=len(os.sched_getaffinity(0)),
+                      shuffle_partitions=16)
     con = duck_connection(sf_dir)
     failures = 0
     for name in names:
