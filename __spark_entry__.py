@@ -36,24 +36,25 @@ def entry(spark: SparkSession) -> DataFrame:
     from go_shapefile_spark.queries import SPARK, geotagged_events_cte
     from go_shapefile_spark.sources.shapefile import read_shapefile_df
 
+    countries_zip = "/root/reference/testdata/110m-admin-0-countries.zip"
+    if not os.path.exists(countries_zip):
+        raise FileNotFoundError(
+            f"entry() needs the ne_110m countries shapefile: {countries_zip} "
+            "does not exist")
     sf_dir = "/root/testdata/sf0.001"
     register_tables(spark, sf_dir)
     pts = spark.sql(f"WITH {geotagged_events_cte(SPARK)} SELECT id, lon, lat FROM pts")
 
-    countries_zip = "/root/reference/testdata/110m-admin-0-countries.zip"
-    if os.path.exists(countries_zip):
-        features = read_shapefile_df(spark, countries_zip)
-        # cover builds distributed (mapInPandas over polygons) — nothing
-        # is collected to the driver
-        cover = PreparedCover.from_features(
-            features.select("fid", "geometry"), res=6)
-        names = features.select("fid", "NAME")
-        joined = spatial_join_prepared(pts, cover)
-        return (joined.join(names, joined.polygon_fid == names.fid)
-                .groupBy("NAME").agg(F.count(F.lit(1)).alias("n_points"))
-                .orderBy(F.col("n_points").desc(), F.col("NAME")))
-    # fallback: pure-relational flagship if the reference corpus is absent
-    return _registry()[0]["q5_region_revenue"](spark, sf_dir)
+    features = read_shapefile_df(spark, countries_zip)
+    # cover builds distributed (mapInPandas over polygons) — nothing
+    # is collected to the driver
+    cover = PreparedCover.from_features(
+        features.select("fid", "geometry"), res=6)
+    names = features.select("fid", "NAME")
+    joined = spatial_join_prepared(pts, cover)
+    return (joined.join(names, joined.polygon_fid == names.fid)
+            .groupBy("NAME").agg(F.count(F.lit(1)).alias("n_points"))
+            .orderBy(F.col("n_points").desc(), F.col("NAME")))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -277,34 +277,47 @@ SELECT x, y, CAST(MIN(d) AS BIGINT) AS dist FROM walk GROUP BY x, y"""
 # EXACT cell count and coordinate spans (one tiny agg on the pinned
 # grid) and, when bounded, collect the grid through Arrow and run the
 # identical integer recurrence vectorized in numpy on the driver —
-# the same two-level discipline as connected_components' local finish
-# (shrink distributively, iterate where per-round latency is free).
-# The fallback keeps the fully distributed chain; tests force it.
+# the bounded driver finish of operators/local.py, shared with
+# connected_components and triangle counts (shrink distributively,
+# iterate where per-round latency is free).
+# The fallback keeps the fully distributed chain; tests force it by
+# monkeypatching the cap.
 
 _GRID_LOCAL_MAX_CELLS = 1_000_000
 
 
-def _grid_local_stats(base: DataFrame):
-    """Exact cell count + coordinate spans of the aggregated grid —
-    the auto-gate for the driver-side iterate path (one 1-row agg on
-    the pinned relation, which doubles as the pin materialization)."""
+def _queen_offsets(diag: int, ortho: int) -> list[tuple[int, int, int]]:
+    """The 8 queen-adjacency offsets ``(dx, dy, w)`` in (dx, dy) order,
+    weighted ``diag`` on diagonals and ``ortho`` otherwise — the one
+    table behind both the driver kernels and the distributed edge SQL."""
+    return [(dx, dy, diag if dx and dy else ortho)
+            for dx in (-1, 0, 1) for dy in (-1, 0, 1) if dx or dy]
+
+
+def _offsets_values(offsets) -> str:
+    """``offsets`` as a SQL ``VALUES`` row list ``(dx,dy,w),...``."""
+    return ",".join(f"({dx},{dy},{w})" for dx, dy, w in offsets)
+
+
+def _grid_local(grid: DataFrame, cols, kernel, schema: str):
+    """Bounded driver finish (operators/local.py) for a pinned grid.
+    One 1-row agg (which doubles as the pin materialization) gives the
+    exact cell count and coordinate spans ``st``; ``kernel(pdf, st)``
+    runs when the count is under ``_GRID_LOCAL_MAX_CELLS`` and the
+    (span+2)-padded pack key fits int64 (sparse adversarial coords keep
+    the distributed chain).  Returns None otherwise."""
     from pyspark.sql import functions as F
 
-    return base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("x").alias("x0"), F.max("x").alias("x1"),
-        F.min("y").alias("y0"), F.max("y").alias("y1")).collect()[0]
+    from .local import local_finish
 
-
-def _grid_local_ok(st) -> bool:
-    """Bounded for the driver path: cell count under the cap and the
-    (span+2)-padded pack key fits int64 (sparse adversarial coords
-    fall back to the distributed chain)."""
-    if st.n == 0 or st.n > _GRID_LOCAL_MAX_CELLS:
-        return False
-    spanx = int(st.x1) - int(st.x0) + 3
-    spany = int(st.y1) - int(st.y0) + 3
-    return spanx * spany < (1 << 62)
+    st = grid.agg(F.count(F.lit(1)).alias("n"),
+                  F.min("x").alias("x0"), F.max("x").alias("x1"),
+                  F.min("y").alias("y0"), F.max("y").alias("y1")).collect()[0]
+    if st.n and ((int(st.x1) - int(st.x0) + 3)
+                 * (int(st.y1) - int(st.y0) + 3) >= (1 << 62)):
+        return None
+    return local_finish(grid, cols, st.n, _GRID_LOCAL_MAX_CELLS,
+                        lambda pdf: kernel(pdf, st), schema)
 
 
 def _grid_pack(pdf, st):
@@ -340,24 +353,17 @@ def _grid_neighbor_pairs(key_sorted, spany, offsets):
     return out
 
 
-def _minplus_local_df(spark, base: DataFrame, st, offsets,
-                      rounds: int, out_col: str) -> DataFrame:
+def _minplus_local(pdf, st, offsets, rounds: int, out_col: str):
     """Driver-side min-plus (Bellman-Ford) rounds over the bounded
-    grid: the exact integer recurrence ``d_r(c) = min(d_{r-1}(c),
-    min_nbr d_{r-1}(nbr) + w)`` the distributed chain runs —
-    ``np.minimum.at`` is unbuffered, min is order-free, and all values
-    are int64, so the result is bit-identical.  Unreached cells stay
-    at the sentinel and are dropped (the oracle's absent-cells cap)."""
+    grid ``pdf(x, y, is_src)``: the exact integer recurrence
+    ``d_r(c) = min(d_{r-1}(c), min_nbr d_{r-1}(nbr) + w)`` the
+    distributed chain runs — ``np.minimum.at`` is unbuffered, min is
+    order-free, and all values are int64, so the result is
+    bit-identical.  Unreached cells stay at the sentinel and are
+    dropped (the oracle's absent-cells cap)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    schema = T.StructType([T.StructField("x", T.LongType(), True),
-                           T.StructField("y", T.LongType(), True),
-                           T.StructField(out_col, T.LongType(), True)])
-    pdf = base.toPandas()
-    if len(pdf) == 0:
-        return spark.createDataFrame([], schema)
     order, key_sorted, spany = _grid_pack(pdf, st)
     x = pdf["x"].to_numpy(np.int64)[order]
     y = pdf["y"].to_numpy(np.int64)[order]
@@ -371,79 +377,76 @@ def _minplus_local_df(spark, base: DataFrame, st, offsets,
             np.minimum.at(nd, j_idx, dist[i_idx] + w)
         dist = nd
     keep = dist < inf
-    out = pd.DataFrame({"x": x[keep], "y": y[keep], out_col: dist[keep]})
-    if len(out) == 0:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(out, schema)
+    return pd.DataFrame({"x": x[keep], "y": y[keep], out_col: dist[keep]})
 
 
-def grid_distance_transform(points: DataFrame, rounds: int = 8,
-                            pin: str | None = None,
-                            slot: str | None = None,
-                            local_iterate: bool | None = None
-                            ) -> DataFrame:
-    """Multi-source BFS distance over the occupied pixel grid:
-    ``points(lon, lat, is_src)`` → ``(x, y, dist)`` for every cell
-    reachable from a source cell within ``rounds`` queen-steps through
-    occupied cells (unreached cells are absent — same cap in the
-    oracle).
-
-    Scale posture: the edge relation is built ONCE (one offset fan-out
-    + equi-join, pinned) and carries a ZERO-weight self-loop per
-    occupied cell, so each BFS round is ONE equi-join + min-aggregate
-    referencing the previous iterate exactly once — the whole fixed
-    round count is a single lazy plan (one job, linear depth, the
-    pinned edge exchange reused across rounds) instead of a
-    per-round checkpoint job (r6 optimization: 4.1 s → one job).
-    ``dist_r(c) = min(dist_{r-1}(c), min_nbr dist_{r-1}(nbr) + 1)``
-    is exactly the first-reach BFS round recurrence, so the output is
-    unchanged.  A fixed round count means NO per-round driver action
-    (no count(), no convergence collect).
-    """
+def _grid_minplus(points: DataFrame, rounds: int, pin: str | None,
+                  slot: str | None, offsets, out_col: str,
+                  view: str) -> DataFrame:
+    """Min-plus grid runner: ``points(lon, lat, is_src)`` → ``(x, y,
+    {out_col})`` = min path weight (edge weights from ``offsets``) from
+    any source cell within ``rounds`` edges through occupied cells;
+    ``view`` prefixes the call's temp views.  A bounded grid runs on
+    the driver (section comment above).  Otherwise the edge relation
+    is built ONCE (pinned) with a ZERO-weight self-loop per cell, so
+    each round is ONE equi-join + min-aggregate over the previous
+    iterate — the fixed round count is a single lazy plan (one job, r6:
+    4.1 s → one job) with no per-round driver action.  ``d_r(c) =
+    min(d_{r-1}(c), min_nbr d_{r-1}(nbr) + w)`` is the Bellman-Ford
+    round: after R rounds, the min over ≤R-edge paths (with unit
+    weights, the first-reach BFS distance)."""
     from pyspark.sql import functions as F
 
     from .pinning import fresh_pins
 
     spark = points.sparkSession
     pinf = fresh_pins(spark, slot, strategy=pin)
-    v = "dtx_pts_in"
     points.selectExpr("lon", "lat",
                       "CAST(is_src AS BIGINT) AS is_src") \
-        .createOrReplaceTempView(v)
-    cte = distance_transform_base_cte(H.SPARK, pts=v)
+        .createOrReplaceTempView(f"{view}_pts_in")
+    cte = distance_transform_base_cte(H.SPARK, pts=f"{view}_pts_in")
     # split the chain: materialize dbase once, edges once
     base_sql = cte[:cte.index("doffs AS (")].rstrip().rstrip(",")
     base = pinf(spark.sql("WITH " + base_sql.lstrip() +
                           "\nSELECT * FROM dbase"))
-    st = _grid_local_stats(base)
-    if _grid_local_ok(st) if local_iterate is None else local_iterate:
-        # bounded grid: run the identical recurrence on the driver
-        # (see the section comment above) — the edge relation is never
-        # built, and the 8 shuffle rounds collapse into vectorized
-        # numpy passes
-        return _minplus_local_df(
-            spark, base, st,
-            [(-1, -1, 1), (-1, 0, 1), (-1, 1, 1), (0, -1, 1),
-             (0, 1, 1), (1, -1, 1), (1, 0, 1), (1, 1, 1)],
-            rounds, out_col="dist")
-    base.createOrReplaceTempView("dtx_base")
+    local = _grid_local(
+        base, ("x", "y", "is_src"),
+        lambda pdf, st: _minplus_local(pdf, st, offsets, rounds, out_col),
+        f"x bigint, y bigint, {out_col} bigint")
+    if local is not None:
+        # bounded grid: the edge relation is never built, and the
+        # shuffle rounds collapse into vectorized numpy passes
+        return local
+    base.createOrReplaceTempView(f"{view}_base")
     edges = pinf(spark.sql(f"""
-WITH doffs AS (SELECT * FROM (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),
-                                     (0,1),(1,-1),(1,0),(1,1)) AS t(dx, dy))
-SELECT b.x, b.y, n.x AS nx, n.y AS ny, CAST(1 AS BIGINT) AS w
-FROM dtx_base b CROSS JOIN doffs o
-JOIN dtx_base n ON n.x = b.x + o.dx AND n.y = b.y + o.dy
+WITH doffs AS (SELECT * FROM (VALUES {_offsets_values(offsets)})
+               AS t(dx, dy, w))
+SELECT b.x, b.y, n.x AS nx, n.y AS ny, CAST(o.w AS BIGINT) AS w
+FROM {view}_base b CROSS JOIN doffs o
+JOIN {view}_base n ON n.x = b.x + o.dx AND n.y = b.y + o.dy
 UNION ALL
-SELECT x, y, x AS nx, y AS ny, CAST(0 AS BIGINT) AS w FROM dtx_base"""))
+SELECT x, y, x AS nx, y AS ny, CAST(0 AS BIGINT) AS w FROM {view}_base"""))
 
     dist = base.where("is_src = 1") \
-        .selectExpr("x", "y", "CAST(0 AS BIGINT) AS dist")
+        .selectExpr("x", "y", f"CAST(0 AS BIGINT) AS {out_col}")
     for _ in range(int(rounds)):
         dist = (dist.join(edges, ["x", "y"])
                 .selectExpr("nx AS x", "ny AS y",
-                            "CAST(dist + w AS BIGINT) AS dist")
-                .groupBy("x", "y").agg(F.min("dist").alias("dist")))
+                            f"CAST({out_col} + w AS BIGINT) AS {out_col}")
+                .groupBy("x", "y").agg(F.min(out_col).alias(out_col)))
     return dist
+
+
+def grid_distance_transform(points: DataFrame, rounds: int = 8,
+                            pin: str | None = None,
+                            slot: str | None = None) -> DataFrame:
+    """Multi-source BFS distance over the occupied pixel grid:
+    ``points(lon, lat, is_src)`` → ``(x, y, dist)`` for every cell
+    reachable from a source cell within ``rounds`` queen-steps through
+    occupied cells (unreached cells are absent — same cap in the
+    oracle).  The unit-weight min-plus runner (:func:`_grid_minplus`)."""
+    return _grid_minplus(points, rounds, pin, slot, _queen_offsets(1, 1),
+                         "dist", "dtx")
 
 
 # --- raster blob labeling (connected-component regions) -------------------
@@ -549,35 +552,22 @@ blabels AS (
 """
 
 
-def _flow_local_df(spark, grid: DataFrame, st, rounds: int,
-                   k: int) -> DataFrame:
-    """Driver-side D8 inflow rounds over the bounded degree grid — the
-    exact integer algebra of the distributed chain: per cell, the
-    steepest uphill neighbor (max n, ties by smallest (x, y) — the
-    template's ROW_NUMBER ORDER BY n DESC, x, y), then ``rounds``
-    passes of ``u = 1 + Σ_incoming u`` (``np.add.at`` is unbuffered;
-    integer sums are order-free), then the top-``k`` ranking by
-    (acc DESC, x, y).  All int64 end to end."""
+def _flow_local(pdf, st, rounds: int, k: int):
+    """Driver-side D8 inflow rounds over the bounded degree grid
+    ``pdf(x, y, n)`` — the exact integer algebra of the distributed
+    chain: per cell, the steepest uphill neighbor (max n, ties by
+    smallest (x, y) — the template's ROW_NUMBER ORDER BY n DESC, x, y),
+    then ``rounds`` passes of ``u = 1 + Σ_incoming u`` (``np.add.at``
+    is unbuffered; integer sums are order-free), then the top-``k``
+    ranking by (acc DESC, x, y).  All int64 end to end."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    schema = T.StructType([T.StructField("x", T.LongType(), True),
-                           T.StructField("y", T.LongType(), True),
-                           T.StructField("n", T.LongType(), True),
-                           T.StructField("acc", T.LongType(), True),
-                           T.StructField("rk", T.LongType(), True)])
-    pdf = grid.toPandas()
-    if len(pdf) == 0:
-        return spark.createDataFrame([], schema)
     order, key_sorted, spany = _grid_pack(pdf, st)
     x = pdf["x"].to_numpy(np.int64)[order]
     y = pdf["y"].to_numpy(np.int64)[order]
     n = pdf["n"].to_numpy(np.int64)[order]
-    pairs = _grid_neighbor_pairs(
-        key_sorted, spany,
-        [(-1, -1, 0), (-1, 0, 0), (-1, 1, 0), (0, -1, 0),
-         (0, 1, 0), (1, -1, 0), (1, 0, 0), (1, 1, 0)])
+    pairs = _grid_neighbor_pairs(key_sorted, spany, _queen_offsets(0, 0))
     m = len(x)
     bn = np.full(m, np.int64(-1))
     bj = np.full(m, -1)
@@ -607,17 +597,14 @@ def _flow_local_df(spark, grid: DataFrame, st, rounds: int,
         np.add.at(inflow, tgt, u[src])
         u = 1 + inflow
     topk = np.lexsort((y, x, -u))[:int(k)]
-    out = pd.DataFrame({
+    return pd.DataFrame({
         "x": x[topk], "y": y[topk], "n": n[topk], "acc": u[topk],
         "rk": np.arange(1, len(topk) + 1, dtype=np.int64)})
-    return spark.createDataFrame(out, schema)
 
 
 def grid_flow_accumulation(points: DataFrame, rounds: int = 8,
                            k: int = 50, pin: str | None = None,
-                           slot: str | None = None,
-                           local_iterate: bool | None = None
-                           ) -> DataFrame:
+                           slot: str | None = None) -> DataFrame:
     """D8 uphill flow accumulation over the occupied 1-degree grid:
     ``points(lon, lat)`` → top-``k`` ``(x, y, n, acc, rk)`` — the
     runner twin of queries.flow_acc_sql (identical integer algebra,
@@ -645,12 +632,15 @@ def grid_flow_accumulation(points: DataFrame, rounds: int = 8,
                             "CAST(FLOOR(lat) AS BIGINT) AS y")
                 .groupBy("x", "y")
                 .agg(F.count(F.lit(1)).cast("long").alias("n")))
-    st = _grid_local_stats(grid)
-    if _grid_local_ok(st) if local_iterate is None else local_iterate:
+    local = _grid_local(grid, ("x", "y", "n"),
+                        lambda pdf, st: _flow_local(pdf, st, rounds, k),
+                        "x bigint, y bigint, n bigint not null, "
+                        "acc bigint not null, rk bigint not null")
+    if local is not None:
         # bounded grid: steepest-neighbor pick + inflow rounds on the
         # driver (see the bounded-grid section comment) — the dirs
         # relation is never built distributively
-        return _flow_local_df(spark, grid, st, rounds, k)
+        return local
     grid.createOrReplaceTempView("fa_grid_v")
     # the neighbor coordinates are PRECOMPUTED in a subquery before
     # the b join: with `b.n > a.n` written directly against the
@@ -658,15 +648,15 @@ def grid_flow_accumulation(points: DataFrame, rounds: int = 8,
     # inequality and picks a quadratic BroadcastNestedLoopJoin (43M
     # rows, 68 s at sf0.1); staged, the only a–b edge is the clean
     # (bx, by) equi-join (~0.5 s)
-    dirs = pinf(spark.sql("""
+    offs = _offsets_values(_queen_offsets(0, 0))
+    dirs = pinf(spark.sql(f"""
 SELECT x, y, tx, ty FROM (
   SELECT c.x AS x, c.y AS y, b.x AS tx, b.y AS ty,
          ROW_NUMBER() OVER (PARTITION BY c.x, c.y
                             ORDER BY b.n DESC, b.x, b.y) AS rk
   FROM (SELECT a.x, a.y, a.n, a.x + o.dx AS bx, a.y + o.dy AS by
         FROM fa_grid_v a
-        CROSS JOIN (SELECT * FROM (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),
-                           (0,1),(1,-1),(1,0),(1,1)) AS o(dx, dy)) o) c
+        CROSS JOIN (SELECT * FROM (VALUES {offs}) AS o(dx, dy, w)) o) c
   JOIN fa_grid_v b ON b.x = c.bx AND b.y = c.by
   WHERE b.n > c.n) r WHERE rk = 1"""))
 
@@ -738,66 +728,16 @@ SELECT x, y, CAST(MIN(d) AS BIGINT) AS cost FROM walk GROUP BY x, y"""
 
 def grid_cost_distance(points: DataFrame, rounds: int = 8,
                        pin: str | None = None,
-                       slot: str | None = None,
-                       local_iterate: bool | None = None) -> DataFrame:
+                       slot: str | None = None) -> DataFrame:
     """Weighted (chamfer 2-3) cost distance: ``points(lon, lat,
     is_src)`` → ``(x, y, cost)`` = min path weight from any source
     within ``rounds`` edges through occupied cells — the
     accessibility/least-cost-path surface (grid_distance_transform's
-    weighted sibling).
-
-    Min-plus (Bellman-Ford) relaxation: the edge relation carries a
-    ZERO-weight self-loop per occupied cell, so each round is ONE
-    equi-join + min-aggregate referencing the previous iterate exactly
-    once — the fixed round count is a single lazy plan (one job,
-    linear depth, the pinned edge exchange reused across rounds)
-    instead of per-round checkpoint jobs (r6 optimization: the prior
-    delta-frontier loop paid ~0.6 s of job latency per round).
-    ``cost_r(c) = min(cost_{r-1}(c), min_nbr cost_{r-1}(nbr) + w)``
-    is the Bellman-Ford round, so after R rounds the result is the
-    min over ≤R-edge paths — the oracle's definition, unchanged.
-    Every relation is grid-bounded; no per-round driver action."""
-    from pyspark.sql import functions as F
-
-    from .pinning import fresh_pins
-
-    spark = points.sparkSession
-    pinf = fresh_pins(spark, slot, strategy=pin)
-    v = "cdx_pts_in"
-    points.selectExpr("lon", "lat",
-                      "CAST(is_src AS BIGINT) AS is_src") \
-        .createOrReplaceTempView(v)
-    cte = cost_distance_base_cte(H.SPARK, pts=v)
-    base_sql = cte[:cte.index("doffs AS (")].rstrip().rstrip(",")
-    base = pinf(spark.sql("WITH " + base_sql.lstrip() +
-                          "\nSELECT * FROM dbase"))
-    st = _grid_local_stats(base)
-    if _grid_local_ok(st) if local_iterate is None else local_iterate:
-        # chamfer 2-3 weights through the same bounded driver path
-        return _minplus_local_df(
-            spark, base, st,
-            [(-1, -1, 3), (-1, 0, 2), (-1, 1, 3), (0, -1, 2),
-             (0, 1, 2), (1, -1, 3), (1, 0, 2), (1, 1, 3)],
-            rounds, out_col="cost")
-    base.createOrReplaceTempView("cdx_base")
-    edges = pinf(spark.sql("""
-WITH doffs AS (SELECT * FROM (VALUES (-1,-1,3),(-1,0,2),(-1,1,3),(0,-1,2),
-                                     (0,1,2),(1,-1,3),(1,1,3),(1,0,2))
-               AS t(dx, dy, w))
-SELECT b.x, b.y, n.x AS nx, n.y AS ny, CAST(o.w AS BIGINT) AS w
-FROM cdx_base b CROSS JOIN doffs o
-JOIN cdx_base n ON n.x = b.x + o.dx AND n.y = b.y + o.dy
-UNION ALL
-SELECT x, y, x AS nx, y AS ny, CAST(0 AS BIGINT) AS w FROM cdx_base"""))
-
-    dist = base.where("is_src = 1") \
-        .selectExpr("x", "y", "CAST(0 AS BIGINT) AS cost")
-    for _ in range(int(rounds)):
-        dist = (dist.join(edges, ["x", "y"])
-                .selectExpr("nx AS x", "ny AS y",
-                            "CAST(cost + w AS BIGINT) AS cost")
-                .groupBy("x", "y").agg(F.min("cost").alias("cost")))
-    return dist
+    weighted sibling on the same min-plus runner,
+    :func:`_grid_minplus`).  After R Bellman-Ford rounds the result is
+    the min over ≤R-edge paths — the oracle's definition."""
+    return _grid_minplus(points, rounds, pin, slot, _queen_offsets(3, 2),
+                         "cost", "cdx")
 
 
 KMEANS_SCHEMA = ("ck int, n bigint not null, cx bigint, cy bigint, "

@@ -49,6 +49,14 @@ _BROADCAST_EDGES = 1_000_000
 # the remainder where per-round latency dominates data).
 _LOCAL_FINISH_EDGES = 2_000_000
 
+# Driver triangle-count cutoffs (exact edge count; exact wedge count
+# Σ od·(od−1)/2 from degrees, before anything quadratic is built).  At
+# sf0.1 the local count replaces a global-rank window and a 4.8M-row
+# wedge join (~1.6 s of shuffle latency, r6); the wedge cap bounds the
+# kernel's seven per-wedge int64 arrays (~1.4 GB at 25M).
+_TRIANGLE_LOCAL_EDGES = 2_000_000
+_TRIANGLE_LOCAL_WEDGES = 25_000_000
+
 
 def _large_star(edges: DataFrame, small: bool = False) -> DataFrame:
     """Connect every neighbor larger than u to u's smallest neighbor
@@ -114,34 +122,25 @@ def _np_min_hook(a, b, n_nodes: int):
         np.minimum.at(parent, hi[live], lo[live])
 
 
-def _local_components(edges: DataFrame) -> DataFrame:
-    """(node, component) for a live edge set the caller has PROVEN
-    bounded (≤ ``_LOCAL_FINISH_EDGES`` rows, exact count from the
-    convergence checksum): one Arrow collect, a vectorized numpy
+def _local_components(pdf):
+    """Kernel for the bounded driver finish (operators/local.py):
+    ``pdf(src, dst)`` → ``(node, component)`` by a vectorized numpy
     union-find (:func:`_np_min_hook` — ids factorized through
     ``np.unique``, whose sorted output makes index order coincide with
     id order, so the min-index root IS the min-id label; works for any
-    orderable id dtype, long and string alike), labels re-parallelized
-    as a local relation.  Output is the same relation the star loop
-    converges to — every edge endpoint labeled with its component's
-    minimum id — and ``np.unique``'s sorted node order makes the
-    emitted rows independent of collect partition order."""
+    orderable id dtype, long and string alike).  Output is the same
+    relation the star loop converges to — every edge endpoint labeled
+    with its component's minimum id — and ``np.unique``'s sorted node
+    order makes the emitted rows independent of collect partition
+    order."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    node_t = edges.schema["src"].dataType
-    schema = T.StructType([T.StructField("node", node_t, True),
-                           T.StructField("component", node_t, True)])
-    pdf = edges.toPandas()
-    if len(pdf) == 0:
-        return edges.sparkSession.createDataFrame([], schema)
-    sa = pdf.iloc[:, 0].to_numpy()
-    sb = pdf.iloc[:, 1].to_numpy()
+    sa = pdf["src"].to_numpy()
+    sb = pdf["dst"].to_numpy()
     nodes, idx = np.unique(np.concatenate([sa, sb]), return_inverse=True)
     roots = _np_min_hook(idx[:len(sa)], idx[len(sa):], len(nodes))
-    out = pd.DataFrame({"node": nodes, "component": nodes[roots]})
-    return edges.sparkSession.createDataFrame(out, schema)
+    return pd.DataFrame({"node": nodes, "component": nodes[roots]})
 
 
 def _checksum(edges: DataFrame) -> tuple[int, int]:
@@ -159,8 +158,7 @@ def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst", max_iter: int = 25,
                          pin: str | None = None,
                          slot: str | None = None,
-                         assume_normalized: bool = False,
-                         local_finish: int | None = None) -> DataFrame:
+                         assume_normalized: bool = False) -> DataFrame:
     """Undirected edge list → (node, component) with component = the
     smallest node id in each connected component.  Nodes are every
     distinct endpoint (isolated nodes don't appear — they were never in
@@ -187,18 +185,18 @@ def connected_components(edges: DataFrame, src: str = "src",
     O(log n); 25 covers any realistic graph) — non-convergence raises
     rather than returning partial labels.
 
-    Once the live edge set is at or below ``local_finish`` rows
-    (default ``_LOCAL_FINISH_EDGES``; the count is EXACT, read from the
-    convergence checksum that runs anyway), the remainder is solved by
-    one bounded collect + union-find on the driver (r6): at that size
+    Once the live edge set is at or below ``_LOCAL_FINISH_EDGES`` rows
+    (the count is EXACT, read from the convergence checksum that runs
+    anyway), the remainder is solved by the bounded driver finish
+    (operators/local.py) with a numpy union-find (r6): at that size
     the star iterations are pure job latency (~0.5 s each of
     scheduling over a few thousand rows), and contraction passes past
     the cutoff are equally pointless, so the contraction loop also
     stops early.  The gate is scale-safe — a graph that is still large
     after contraction keeps the fully distributed star loop — and the
     collected bytes are bounded by the cutoff at any input scale.
-    Tests force ``local_finish=0`` to exercise the star loop.
     """
+    from .local import local_finish
     from .pinning import fresh_pins, rolling_pins
 
     spark = edges.sparkSession
@@ -224,11 +222,10 @@ def connected_components(edges: DataFrame, src: str = "src",
     # worst case.  The convergence checksum doubles as the pass's
     # shrink measurement — no extra jobs.
     hookf = fresh_pins(spark, slot, strategy=pin)
-    local_max = _LOCAL_FINISH_EDGES if local_finish is None else local_finish
     m_total = None
     prev = _checksum(cur)
     for _ in range(3):
-        if prev[0] == 0 or prev[0] <= local_max:
+        if prev[0] == 0 or prev[0] <= _LOCAL_FINISH_EDGES:
             # empty, or already small enough for the driver finish
             # below — further contraction passes would only add jobs
             break
@@ -264,12 +261,14 @@ def connected_components(edges: DataFrame, src: str = "src",
         prev = n
         if not shrunk:
             break
-    if prev[0] <= local_max:
-        # bounded driver finish: the live set is provably tiny (exact
-        # count above); union-find replaces the remaining ~log(n) star
-        # iterations, whose cost at this size is pure job latency
-        contracted = _local_components(cur)
-    else:
+    # bounded driver finish: when the live set is provably tiny (exact
+    # count above), union-find replaces the remaining ~log(n) star
+    # iterations, whose cost at this size is pure job latency
+    node_t = cur.schema["src"].dataType.simpleString()
+    contracted = local_finish(cur, ("src", "dst"), prev[0],
+                              _LOCAL_FINISH_EDGES, _local_components,
+                              f"node {node_t}, component {node_t}")
+    if contracted is None:
         for _ in range(max_iter):
             # the previous checksum's row count is a free exact size of
             # the live edge set: under the broadcast cutoff, hint both
@@ -301,36 +300,22 @@ def connected_components(edges: DataFrame, src: str = "src",
                     .alias("component")))
 
 
-def triangle_counts_local(edges: DataFrame,
-                          max_edges: int = 2_000_000,
-                          max_wedges: int = 25_000_000):
-    """Driver-side per-node triangle counts over an undirected-distinct
-    edge relation ``edges(a, b)`` with a < b — the vectorized twin of
+def _local_triangles(pdf):
+    """Kernel for the bounded driver finish (operators/local.py):
+    per-node triangle counts over ``pdf(a, b)``, an undirected-distinct
+    edge set with a < b — the vectorized twin of
     ``queries.triangle_count_sql``'s orient-by-(degree, node) wedge
     join (r6): identical algebra (orientation by ascending (deg, id),
     wedges = ordered out-neighbor pairs, closed against the oriented
     edge set; nodes in no triangle are absent), exact integer counts.
-    Returns None unless BOTH the exact edge count (one 1-row agg, which
-    doubles as the pin materialization) and the exact wedge count
-    (Σ od·(od−1)/2, computed from degrees before materializing
-    anything quadratic) are under their caps — larger graphs keep the
-    caller's distributed wedge join.  The bounded collect discipline of
-    ``_local_components``: the cutoffs bound driver memory at ANY
-    input scale."""
+    Declines (None) when the exact wedge count Σ od·(od−1)/2, computed
+    from degrees before materializing anything quadratic, is over
+    ``_TRIANGLE_LOCAL_WEDGES``."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    n_edges = edges.count()
-    if n_edges == 0 or n_edges > max_edges:
-        return None
-    spark = edges.sparkSession
-    node_t = edges.schema[0].dataType
-    schema = T.StructType([T.StructField("node", node_t, True),
-                           T.StructField("n_tri", T.LongType(), True)])
-    pdf = edges.toPandas()
-    a = pdf.iloc[:, 0].to_numpy()
-    b = pdf.iloc[:, 1].to_numpy()
+    a = pdf["a"].to_numpy()
+    b = pdf["b"].to_numpy()
     nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
     da, db = idx[:len(a)], idx[len(a):]
     n = len(nodes)
@@ -346,7 +331,7 @@ def triangle_counts_local(edges: DataFrame,
     v = np.where(ra < rb, db, da)
     od = np.bincount(u, minlength=n)
     n_wedges = int((od.astype(np.int64) * (od - 1) // 2).sum())
-    if n_wedges > max_wedges:
+    if n_wedges > _TRIANGLE_LOCAL_WEDGES:
         return None
     # out-neighbors sorted by (u, rk[v]): within each u-group every
     # ordered following-pair is exactly one wedge (e2.rk_v > e1.rk_v)
@@ -369,10 +354,24 @@ def triangle_counts_local(edges: DataFrame,
              + np.bincount(wv[tri], minlength=n)
              + np.bincount(ww[tri], minlength=n)).astype(np.int64)
     keep = n_tri > 0
-    out = pd.DataFrame({"node": nodes[keep], "n_tri": n_tri[keep]})
-    if len(out) == 0:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(out, schema)
+    return pd.DataFrame({"node": nodes[keep], "n_tri": n_tri[keep]})
+
+
+def triangle_counts_local(edges: DataFrame) -> DataFrame | None:
+    """Driver-side triangle counts over ``edges(a, b)`` (a < b,
+    distinct) through the bounded driver finish, or None when the exact
+    edge count (this count doubles as the pin materialization) is over
+    ``_TRIANGLE_LOCAL_EDGES`` or the kernel declines on its wedge cap —
+    larger graphs keep the caller's distributed wedge join."""
+    from pyspark.sql import types as T
+
+    from .local import local_finish
+
+    a = edges.schema["a"]
+    schema = T.StructType([T.StructField("node", a.dataType, a.nullable),
+                           T.StructField("n_tri", T.LongType(), False)])
+    return local_finish(edges, ("a", "b"), edges.count(),
+                        _TRIANGLE_LOCAL_EDGES, _local_triangles, schema)
 
 
 def dedup_keep_representatives(edges: DataFrame, src: str = "src",

@@ -656,52 +656,16 @@ def spatial_join_prepared(points: DataFrame, prepared: PreparedCover,
 
 def spatial_join(spark: SparkSession, points: DataFrame, polygons: list[dict],
                  res: int, lon_col: str = "lon", lat_col: str = "lat",
-                 keep_cols: list[str] | None = None,
-                 method: str = "jvm") -> DataFrame:
+                 keep_cols: list[str] | None = None) -> DataFrame:
     """points ⋈ polygons → rows (point cols..., polygon_fid).
 
     Implements E6: broadcast cell-cover equi-join + E5 PIP refinement on
-    partial cells only.  ``method='jvm'`` (default, the scale path)
-    builds a driver-side ``PreparedCover`` and joins against it — the
-    entire join is Python-free.  ``method='pandas'`` uses the vectorized
-    numpy ray-cast instead (reference semantics twin; both are
-    oracle-tested to identical output).
+    partial cells only.  Builds a driver-side ``PreparedCover`` and
+    joins against it (:func:`spatial_join_prepared`) — the entire join
+    is Python-free.  :func:`spatial_join_bruteforce` is its test oracle.
     """
-    if method == "jvm":
-        return spatial_join_prepared(points, PreparedCover(spark, polygons, res),
-                                     lon_col, lat_col, keep_cols)
-
-    cover_pdf = polygon_cell_cover(polygons, res)
-    cover = spark.createDataFrame(cover_pdf).withColumnRenamed("fid", "polygon_fid")
-
-    pts = points.withColumn("cell", F.expr(C.cell_sql(lon_col, lat_col, res)))
-    joined = pts.join(F.broadcast(cover), "cell")
-
-    full_rows = joined.where(F.col("full")).drop("full")
-    partial_rows = joined.where(~F.col("full")).drop("full")
-
-    poly_bc = spark.sparkContext.broadcast(
-        {p["fid"]: (p["coords"], np.asarray(p["ends"], dtype=np.int64))
-         for p in polygons})
-    schema = full_rows.schema
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        polys = poly_bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            for fid, grp in pdf.groupby("polygon_fid"):
-                coords, ends = polys[int(fid)]
-                keep[grp.index.to_numpy()] = G.point_in_polygon_chunked(
-                    grp[lon_col].to_numpy(), grp[lat_col].to_numpy(), coords, ends)
-            yield pdf[keep]
-
-    refined = partial_rows.mapInPandas(refine, schema=schema)
-    out = full_rows.unionByName(refined)
-    if keep_cols is not None:
-        out = out.select(*keep_cols)
-    return out
+    return spatial_join_prepared(points, PreparedCover(spark, polygons, res),
+                                 lon_col, lat_col, keep_cols)
 
 
 def spatial_join_bruteforce(points_pdf: pd.DataFrame, polygons: list[dict],

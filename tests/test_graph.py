@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from go_shapefile_spark.operators import graph
 from go_shapefile_spark.operators.graph import (connected_components,
                                                 dedup_keep_representatives)
 
@@ -35,42 +36,45 @@ def _union_find(n_edges):
     return out
 
 
-@pytest.mark.parametrize("local_finish", [None, 0])
-def test_cc_matches_union_find_random(spark, local_finish):
-    """local_finish=None takes the r6 bounded driver finish (gate-size
-    graphs are under the cutoff); local_finish=0 forces the distributed
-    star loop — both must equal the independent oracle."""
+@pytest.mark.parametrize("cap", [None, 0])
+def test_cc_matches_union_find_random(spark, monkeypatch, cap):
+    """The default cap takes the r6 bounded driver finish (gate-size
+    graphs are under the cutoff); cap 0 forces the distributed star
+    loop — both must equal the independent oracle."""
+    if cap is not None:
+        monkeypatch.setattr(graph, "_LOCAL_FINISH_EDGES", cap)
     rng = np.random.default_rng(9)
     edges = [(int(a), int(b)) for a, b in
              rng.integers(0, 400, size=(600, 2)) if a != b]
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {r.node: r.component
-           for r in connected_components(
-               df, local_finish=local_finish).collect()}
+           for r in connected_components(df).collect()}
     assert got == _union_find(edges)
 
 
-def test_cc_path_graph_worst_case_converges(spark):
+def test_cc_path_graph_worst_case_converges(spark, monkeypatch):
     """A 200-node path has diameter 199 — label propagation would need
     ~200 rounds; star-contraction must finish within the 25-iteration
     bound and label everything with node 0."""
+    monkeypatch.setattr(graph, "_LOCAL_FINISH_EDGES", 0)
     edges = [(i, i + 1) for i in range(199)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    out = connected_components(df, local_finish=0).collect()
+    out = connected_components(df).collect()
     assert len(out) == 200
     assert all(r.component == 0 for r in out)
 
 
-def test_cc_local_finish_after_contraction(spark):
+def test_cc_local_finish_after_contraction(spark, monkeypatch):
     """A cutoff between the raw and contracted sizes forces the r6
     composition under test: ≥1 distributed contraction pass, then the
     bounded driver finish, then the hook-map join-back."""
+    monkeypatch.setattr(graph, "_LOCAL_FINISH_EDGES", 50)
     rng = np.random.default_rng(11)
     edges = [(int(a), int(b)) for a, b in
              rng.integers(0, 100, size=(600, 2)) if a != b]
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {r.node: r.component
-           for r in connected_components(df, local_finish=50).collect()}
+           for r in connected_components(df).collect()}
     assert got == _union_find(edges)
 
 
@@ -101,11 +105,12 @@ def test_cc_string_ids(spark):
                    ("img-c", "img-a"), ("x", "x"), ("y", "x")]
 
 
-def test_cc_nonconvergence_raises(spark):
+def test_cc_nonconvergence_raises(spark, monkeypatch):
+    monkeypatch.setattr(graph, "_LOCAL_FINISH_EDGES", 0)
     df = spark.createDataFrame([(i, i + 1) for i in range(64)],
                                "src long, dst long")
     with pytest.raises(RuntimeError, match="converge"):
-        connected_components(df, max_iter=1, local_finish=0)
+        connected_components(df, max_iter=1)
 
 
 def test_pagerank_cells_matches_python_power_iteration():
@@ -183,7 +188,7 @@ def test_triangle_count_matches_bruteforce():
         assert max(fan.values()) <= int((2 * len(pairs)) ** 0.5) + 1
 
 
-def test_triangle_counts_local_matches_bruteforce(spark):
+def test_triangle_counts_local_matches_bruteforce(spark, monkeypatch):
     """The r6 driver-side triangle counter (graph.triangle_counts_local)
     equals the O(n^3) brute force on random graphs, and respects its
     bounded-collect gates (None above either cap)."""
@@ -211,8 +216,10 @@ def test_triangle_counts_local_matches_bruteforce(spark):
                 for z in (uu, vv, wW):
                     want[z] = want.get(z, 0) + 1
         assert got == want
-        assert triangle_counts_local(df, max_edges=1) is None
-        assert triangle_counts_local(df, max_wedges=1) is None
+        for cap in ("_TRIANGLE_LOCAL_EDGES", "_TRIANGLE_LOCAL_WEDGES"):
+            with monkeypatch.context() as m:
+                m.setattr(graph, cap, 1)
+                assert triangle_counts_local(df) is None, cap
 
 
 def test_triangle_count_spark_matches_duckdb(spark):
@@ -233,3 +240,32 @@ def test_triangle_count_spark_matches_duckdb(spark):
     con.executemany("INSERT INTO tge VALUES (?, ?)", pairs)
     want = dict(con.sql("WITH " + triangle_count_sql("tge")).fetchall())
     assert got == want and sum(got.values()) % 3 == 0 and got
+
+
+def test_triangle_counts_distributed_branch_matches_local_and_oracle(
+        spark, sf_dir, monkeypatch):
+    """An edge cap of 0 forces ``queries()["triangle_counts"]`` onto its
+    distributed fallback (pinned ``tg_oe`` plus the single-pass
+    ``explode(array(u, v, w))`` corner rewrite); at sf0.001 it must
+    return the local path's rows and the DuckDB oracle's."""
+    import os
+
+    import duckdb
+
+    import __spark_entry__ as entry
+    from go_shapefile_spark.queries import TABLES
+
+    run = entry.queries()["triangle_counts"]
+    local = sorted(map(tuple, run(spark, sf_dir).collect()))
+    monkeypatch.setattr(graph, "_TRIANGLE_LOCAL_EDGES", 0)
+    df = run(spark, sf_dir)
+    assert "explode" in df._jdf.queryExecution().executedPlan().toString()
+    dist = sorted(map(tuple, df.collect()))
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    want = sorted(
+        con.execute(entry.oracle_sql()["triangle_counts"]).fetchall())
+    assert local == dist == want and want

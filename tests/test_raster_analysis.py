@@ -462,14 +462,16 @@ def test_cost_distance_matches_dijkstra_reference(spark):
     assert got[(5, 1)] == got[(4, 0)] + 3
 
 
-def test_grid_runners_local_iterate_matches_distributed(spark):
+def test_grid_runners_local_iterate_matches_distributed(spark, monkeypatch):
     """The r6 bounded-grid driver iterate (auto-gated on the exact cell
     count) is row-identical to the distributed join-per-round chain for
     all three grid runners — the same recurrence, two engines.  The
     corridor/Dijkstra reference tests above pin the local path against
-    hand oracles; this keeps the distributed fallback covered."""
+    hand oracles; a cell cap of 0 keeps the distributed fallback
+    covered."""
     import pandas as pd
 
+    from go_shapefile_spark.operators import clustering
     from go_shapefile_spark.operators.clustering import (
         grid_cost_distance, grid_distance_transform,
         grid_flow_accumulation)
@@ -484,10 +486,10 @@ def test_grid_runners_local_iterate_matches_distributed(spark):
     for op, args in ((grid_distance_transform, {"rounds": 5}),
                      (grid_cost_distance, {"rounds": 5}),
                      (grid_flow_accumulation, {"rounds": 5, "k": 30})):
-        a = sorted(map(tuple, op(pts, local_iterate=True,
-                                 **args).collect()))
-        b = sorted(map(tuple, op(pts, local_iterate=False,
-                                 **args).collect()))
+        a = sorted(map(tuple, op(pts, **args).collect()))
+        with monkeypatch.context() as m:
+            m.setattr(clustering, "_GRID_LOCAL_MAX_CELLS", 0)
+            b = sorted(map(tuple, op(pts, **args).collect()))
         assert a == b and a, op.__name__
 
 

@@ -74,14 +74,13 @@ def test_spatial_join_res_invariance(spark, countries):
     pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
 
 
-def test_jvm_and_pandas_methods_agree(spark, countries):
+def test_jvm_join_matches_bruteforce_oracle(spark, countries):
     pts = _points(1200, seed=21)
     points_df = spark.createDataFrame(pts)
-    a = (spatial_join(spark, points_df, countries, res=6, method="jvm")
+    a = (spatial_join(spark, points_df, countries, res=6)
          .select("id", "polygon_fid").toPandas()
          .sort_values(["id", "polygon_fid"]).reset_index(drop=True))
-    b = (spatial_join(spark, points_df, countries, res=6, method="pandas")
-         .select("id", "polygon_fid").toPandas()
+    b = (spatial_join_bruteforce(pts, countries)[["id", "polygon_fid"]]
          .sort_values(["id", "polygon_fid"]).reset_index(drop=True))
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
@@ -89,7 +88,7 @@ def test_jvm_and_pandas_methods_agree(spark, countries):
 def test_jvm_join_plan_is_python_free(spark, countries):
     from go_shapefile_spark.plans.audit import assert_no_python_udf
     pts = spark.createDataFrame(_points(100))
-    joined = spatial_join(spark, pts, countries[:30], res=6, method="jvm")
+    joined = spatial_join(spark, pts, countries[:30], res=6)
     assert_no_python_udf(joined)
 
 
